@@ -1,18 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Benchmark main — runs the headline queries on SPARK_GRAFT_SF_DIR and
- * prints one JSON line {"metric":...,"queries":{...}}. The headline set
- * covers one representative per operator family (agg, route/explode,
- * split+merge round trip, incremental pull, dedup LSH, ANN, text analysis)
- * rather than all registered queries, so the number tracks engine throughput
- * instead of oracle-surface size.
+ * Per-operator benchmark main: times every row of `rows` on
+ * SPARK_GRAFT_SF_DIR (or a corpus staged from it) through one loop
+ * (`measure`), writes the full record to `BENCH_LATEST_c<cpus>.json`, and
+ * prints it plus a compact summary as the last stdout line. The reported
+ * metric, `headline_sum`, sums the headline set: one representative per
+ * operator family (agg, route/explode, split+merge round trip,
+ * incremental pull, dedup LSH, ANN, text analysis) rather than all
+ * registered queries, so the number tracks engine throughput instead of
+ * oracle-surface size.
  */
 object Bench {
-  val headline: Seq[String] = Seq(
+  private val headline: Seq[String] = Seq(
     "execute_sql", "rolling_window_time", "route_text", "merge_content",
     "query_database_table", "dedup_minhash_lsh", "embed_topk", "token_count",
     "pipeline_e2e")
@@ -20,7 +23,7 @@ object Bench {
   /** Dedup queries re-measured on a degenerate corpus (below): the rows
     * that prove the salt caps / keeper aggregates hold under mass
     * duplication instead of only on the uniform synthetic data. */
-  val skewed: Seq[String] = Seq(
+  private val skewed: Seq[String] = Seq(
     "dedup_minhash_lsh", "dedup_minhash_lsh_capped", "dedup_segments",
     "pipeline_e2e",
     // r15: 30% identical docs make every paragraph window of the mass a
@@ -72,7 +75,7 @@ object Bench {
   /** Queries re-measured across a scale decade (below): the rows that turn
     * the 100 TB plan claims into measured evidence — near-linear x10 wall
     * time means no stage is quadratic, single-reducer, or driver-bound. */
-  val x10: Seq[String] = Seq(
+  private val x10: Seq[String] = Seq(
     "dedup_minhash_lsh", "dedup_segments", "pipeline_e2e", "shuffle_export",
     "embed_topk", "embed_neardup", "embed_topk_lsh", "tfidf_topk",
     "curate_filters_map",
@@ -206,7 +209,7 @@ object Bench {
     * gpt3_e2e likewise (rotation moves the classifier's vocabulary and
     * so the survivor counts); its stages' pairs live in
     * quality_filter_pareto, dedup_minhash_lsh, and decontaminate. */
-  val extra: Seq[String] = Seq("curate_filters_e2e", "ccnet_e2e", "gpt3_e2e",
+  private val extra: Seq[String] = Seq("curate_filters_e2e", "ccnet_e2e", "gpt3_e2e",
     // r15: the Dolma and FineWeb compositions are content-sensitive the
     // same way (the rotation moves langid markers and filter survivor
     // sets), so uniform-only; their stages' scale pairs live in
@@ -219,19 +222,6 @@ object Bench {
     // curate_filters_map
     "dclm_e2e")
 
-  /**
-   * Stage a 10× corpus: the sf documents table replicated 10 times with
-   * distinct ids (docId*10+rep). Replica texts are made DISJOINT documents
-   * via a per-replica consonant rotation (`translate`), not near-copies:
-   * replicating verbatim (or with a token appended) would hand LSH 10-doc
-   * near-dup groups everywhere, and the measurement would track the
-   * quadratic pair OUTPUT of a mass-duplicated corpus — that adversarial
-   * shape is what the skew_* rows measure. The x10 rows answer a different
-   * question: does wall time stay ~linear when a UNIFORM corpus grows 10×?
-   * The rotation is codegen'd, content-deterministic, and keeps word/space
-   * structure (token counts, shingle counts, segment windows all scale
-   * exactly 10×); rep 0 is the original text.
-   */
   /** Stage-once marker protocol shared by the staging helpers: ONE marker
     * may exist per staging dir. The dir's content is mutually exclusive
     * across scale factors (each restage OVERWRITES it), so a marker is
@@ -252,6 +242,19 @@ object Bench {
     }
   }
 
+  /**
+   * Stage a 10× corpus: the sf documents table replicated 10 times with
+   * distinct ids (docId*10+rep). Replica texts are made DISJOINT documents
+   * via a per-replica consonant rotation (`translate`), not near-copies:
+   * replicating verbatim (or with a token appended) would hand LSH 10-doc
+   * near-dup groups everywhere, and the measurement would track the
+   * quadratic pair OUTPUT of a mass-duplicated corpus — that adversarial
+   * shape is what the skew_* rows measure. The x10 rows answer a different
+   * question: does wall time stay ~linear when a UNIFORM corpus grows 10×?
+   * The rotation is codegen'd, content-deterministic, and keeps word/space
+   * structure (token counts, shingle counts, segment windows all scale
+   * exactly 10×); rep 0 is the original text.
+   */
   private def stageX10(spark: SparkSession, sfDir: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-x10"
     stageOnce(out, sfDir) {
@@ -305,7 +308,7 @@ object Bench {
    * With the window explode finally dominating, the longdoc 1×/x10 pair
    * is the scale evidence for the distributed EXACTSUBSTR formulation.
    */
-  private[graft] def stageLongDocs(spark: SparkSession, docsDir: String,
+  private def stageLongDocs(spark: SparkSession, docsDir: String,
                             tag: String, reps: Int = 16,
                             contentKey: String = ""): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-long-$tag"
@@ -339,7 +342,7 @@ object Bench {
    * text with the span differ per doc — only the interior windows are
    * the hot mass, which is the point.)
    */
-  private[graft] def stageSubstrSkew(spark: SparkSession, longDir: String,
+  private def stageSubstrSkew(spark: SparkSession, longDir: String,
                               contentKey: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-substrskew"
     stageOnce(out, longDir + "|" + contentKey) {
@@ -360,7 +363,7 @@ object Bench {
     * every copy through ONE task (a 24-distinct-key variant measured
     * BALANCED across 32 cores — no funnel, so the salt could only
     * lose); salted, the key splits into ~240 sub-partitions. */
-  private[graft] def stageMassDup(spark: SparkSession, sfDir: String): String = {
+  private def stageMassDup(spark: SparkSession, sfDir: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-massdup"
     stageOnce(out, sfDir + "|onekey2") {
       val rep = " massspan" * (448 * 24)
@@ -380,7 +383,7 @@ object Bench {
     * x10 tmp path, so an sf change left a stale, smaller skew corpus —
     * the r15 skew-semantic numbers were measured on it; the
     * stageTailCorpus fix applied here). */
-  private[graft] def stageEmbSkew(spark: SparkSession, sfDir: String,
+  private def stageEmbSkew(spark: SparkSession, sfDir: String,
                                   tag: String = "",
                                   contentKey: String = ""): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-embskew$tag"
@@ -415,7 +418,7 @@ object Bench {
    * pair separates.
    */
   private def stageTailCorpus(spark: SparkSession, docsDir: String,
-                              tag: String, mult: Int = 1,
+                              tag: String, mult: Int,
                               contentKey: String = ""): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-tail-$tag"
     // the marker keys on the CONTENT identity (docsDir + upstream sf),
@@ -424,13 +427,9 @@ object Bench {
     // SF's corpus (observed: an sf0.1 run draining the sf0.01-staged 10×
     // corpus). stageOnce also invalidates other SFs' markers on restage.
     stageOnce(out, docsDir + "|" + contentKey) {
-      val docs0 = spark.read.parquet(s"$docsDir/documents.parquet")
-      val docs =
-        if (mult == 1) docs0
-        else docs0
-          .withColumn("rep", explode(sequence(lit(0), lit(mult - 1))))
-          .select((col("doc_id") * mult + col("rep")).as("doc_id"),
-            col("text"))
+      val docs = spark.read.parquet(s"$docsDir/documents.parquet")
+        .withColumn("rep", explode(sequence(lit(0), lit(mult - 1))))
+        .select((col("doc_id") * mult + col("rep")).as("doc_id"), col("text"))
       val words = split(col("text"), " ")
       val nWin = greatest(ceil(size(words) / lit(12.0)).cast("int"), lit(1))
       val wins = transform(sequence(lit(0), nWin - 1),
@@ -449,7 +448,7 @@ object Bench {
   }
 
   /**
-   * One measured streaming drain: DSv2 TailFileSource over the staged log
+   * One streaming drain: DSv2 TailFileSource over the staged log
    * files → a routing projection (header/body relationship, the
    * RouteOnAttribute shape) → stateful DefragmentText keyed per source
    * file (flatMapGroupsWithState) → relationship-partitioned parquet sink,
@@ -459,11 +458,10 @@ object Bench {
    * offset zero. Row value = wall seconds for the drain, same unit as the
    * batch rows; lines/value is the implied rows/s.
    */
-  private[graft] def tailDrainSeconds(spark: SparkSession, corpus: String): Double = {
+  private def tailDrain(spark: SparkSession, corpus: String): Unit = {
     import spark.implicits._
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-bench-tailrun-" +
       java.util.UUID.randomUUID
-    val t0 = System.nanoTime()
     val tailed = spark.readStream
       .format("graft.streaming.TailFileSource")
       .option("path", corpus).option("glob", ".*\\.txt").load()
@@ -478,7 +476,6 @@ object Bench {
       graft.streaming.FlowRuntime.relationshipSink(msgs.toDF(), s"$base/out"),
       s"$base/ckpt")
     q.stop()
-    (System.nanoTime() - t0) / 1e9
   }
 
   /** Replicated corpus for the streaming near-dup drain: `mult` copies
@@ -490,7 +487,7 @@ object Bench {
     * the banding/state work). Round-11 tail lesson applied here: at
     * mult=1 both drains sat on the ~5 s streaming fixed floor and the
     * 1×/x10 pair proved nothing. */
-  private[graft] def stageNearDupCorpus(spark: SparkSession, docsDir: String,
+  private def stageNearDupCorpus(spark: SparkSession, docsDir: String,
                                         tag: String, mult: Int,
                                         contentKey: String = ""): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-nd-$tag"
@@ -506,31 +503,21 @@ object Bench {
     out
   }
 
-  /** One measured streaming near-dup drain (r16 verdict #8: the
+  /** One streaming near-dup drain (r16 verdict #8: the
     * streaming dedup claim gets a bench row like the batch one): parquet
     * file-stream over the documents table → bandDocs (map-side MinHash
     * banding at the batch dedup_minhash_lsh parameters) → stateful
     * detectNearDuplicates (flatMapGroupsWithState, bucket state capped
     * at 150 signatures — bounded bytes at ANY corpus size) → noop sink,
     * drained with AvailableNow. Fresh checkpoint per rep so every rep
-    * processes the full corpus from offset zero. */
-  private[graft] def neardupDrainSeconds(spark: SparkSession, docsDir: String): Double = {
+    * processes the full corpus from offset zero. The staged corpus ships
+    * documents.parquet as a directory of part files, the path the
+    * file-stream source lists. */
+  private def neardupDrain(spark: SparkSession, docsDir: String): Unit = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-bench-ndrun-" +
       java.util.UUID.randomUUID
-    val t0 = System.nanoTime()
-    val schema = spark.read.parquet(s"$docsDir/documents.parquet").schema
-    // two corpus layouts: the staged corpora ship documents.parquet as a
-    // DIRECTORY of part files (stream path = that dir), the sf fixture
-    // as ONE FILE (the file-stream source needs a directory path, so
-    // stream the parent dir with a name filter — it lists leaf files
-    // only, never descending into sibling .parquet dirs)
-    val one = new java.io.File(s"$docsDir/documents.parquet")
-    val docs =
-      if (one.isDirectory)
-        spark.readStream.schema(schema).parquet(s"$docsDir/documents.parquet")
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(docsDir)
+    val path = s"$docsDir/documents.parquet"
+    val docs = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
     val banded = graft.streaming.StatefulOps.bandDocs(docs, col("doc_id"),
       col("text"), col("doc_id"), n = 5, numHashes = 8, rowsPerBand = 2)
     val hits = graft.streaming.StatefulOps.detectNearDuplicates(banded,
@@ -541,553 +528,356 @@ object Bench {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    (System.nanoTime() - t0) / 1e9
   }
 
-  def main(args: Array[String]): Unit = {
-    // all JSON emitters below use the f-interpolator (= String.format in
-    // the DEFAULT locale): pin ROOT so a comma-decimal locale can never
-    // emit unparseable "0,123" numbers (r19 ADVICE)
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm EVERY headline query once at the smallest scale before measuring:
-    // profiled cold-vs-warm (graft.Profile, sf0.1) shows 5-7 s of one-time
-    // codegen compile + classloading per distinct query shape vs 0.8-1.8 s
-    // steady-state. A cluster run amortizes that one-time cost over hours,
-    // so the number that predicts 100 TB throughput is the warm pass. The
-    // warm-up runs at sf0.01 — an order of magnitude below the measured
-    // scale, so no target-scale data is pre-cached, but with enough task
-    // volume that the JIT actually tiers the generated code (one pass at
-    // sf0.001 measured insufficient: the measured pass still paid compile).
-    val warmDir = "/root/testdata/sf0.01"
-    // warm EVERY benched query shape, not only the headline set — a
-    // non-headline row whose first measured rep pays codegen compile
-    // publishes an inverted 1×-vs-x10 pair (observed: a cold 1× row
-    // slower than its warm x10 row)
-    // Force FULL output materialization through the noop sink. r14 audit
-    // (CountPlanProbe): under `.count()` Catalyst's column pruning +
-    // unique-key outer-join elimination gutted several rows to a bare
-    // parquet scan — dedup_substrings' count plan was literally
-    // `count(1) over Relation` (probed 0.4 s counted vs 40+ s
-    // materialized), token_count and curate_filters_map lost all their
-    // per-doc computation, and shuffle_export shuffled only the 32-byte
-    // key. The noop sink executes the exact output schema every engine
-    // consumer would receive and discards it executor-side — no driver
-    // collect, no files.
-    def force(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    (0 until 2).foreach { _ =>
-      (headline ++ skewed ++ x10 ++ extra).distinct.foreach { name =>
-        try force(name, warmDir)
-        catch { case e: Throwable => System.err.println(s"[bench] warm $name: $e") }
-      }
+  /** Where a row reads its input: `stage` maps the sf dir to the dir the
+    * row's body reads — the sf dir itself, or a corpus staged from it
+    * (staging time is fixture construction, never part of a rep). */
+  final case class Corpus(name: String, stage: (SparkSession, String) => String)
+
+  val Sf = Corpus("sf", (_, sf) => sf)
+  val Skew = Corpus("skew", stageSkewed)
+  val X10 = Corpus("x10", stageX10)
+  val Long1x = Corpus("long1x", (s, sf) => stageLongDocs(s, sf, "1x"))
+  val Long10x = Corpus("long10x", (s, sf) =>
+    stageLongDocs(s, stageX10(s, sf), "10x", contentKey = sf))
+  val SubstrSkew = Corpus("substr-skew", (s, sf) =>
+    stageSubstrSkew(s, stageLongDocs(s, sf, "1x"), sf))
+  val MassDup = Corpus("massdup", stageMassDup)
+  // staged from the x10 embeddings (20k vectors at sf0.1): at the 1×
+  // corpus's 2,000 vectors the hot cluster's quadratic term is below the
+  // job floor (probed 2.19 vs 2.13 uniform) and the skew pair proves
+  // nothing — 14k identical vectors make the uncapped pair join ~100M
+  // cosine evaluations, a contrast the cap must visibly bound
+  val EmbSkew = Corpus("emb-skew", (s, sf) =>
+    stageEmbSkew(s, stageX10(s, sf), "10x", contentKey = sf))
+  // mult=30 per the round-11 finding (see stageTailCorpus): the drain
+  // must be data-dominated before the 1×/x10 pair means anything
+  val Tail1x = Corpus("tail1x", (s, sf) => stageTailCorpus(s, sf, "1x", mult = 30))
+  val Tail10x = Corpus("tail10x", (s, sf) =>
+    stageTailCorpus(s, stageX10(s, sf), "10x", mult = 30, contentKey = sf))
+  // mult=10 suffix-disjoint replicas make the near-dup drain data-dominated
+  // (see stageNearDupCorpus; at mult=1 both sides sat on the ~5 s
+  // streaming fixed floor)
+  val NearDup1x = Corpus("neardup1x", (s, sf) =>
+    stageNearDupCorpus(s, sf, "1x", mult = 10))
+  val NearDup10x = Corpus("neardup10x", (s, sf) =>
+    stageNearDupCorpus(s, stageX10(s, sf), "10x", mult = 10, contentKey = sf))
+
+  /** One measured row: `body` reads the dir its corpus stages and writes
+    * the full result through the noop sink. Every row gets one unmeasured
+    * warm pass on that dir before its reps, unless `warm` is off (the
+    * deliberately slow contrast rows, whose shapes their twins warm).
+    * Row names are unique. */
+  final case class Row(name: String, corpus: Corpus, reps: Int,
+                       body: (SparkSession, String) => Unit,
+                       warm: Boolean = true)
+
+  /** A measured row: the wall seconds of every rep, or None if the warm
+    * pass, the staging or any rep failed. */
+  final case class Result(name: String, times: Option[Seq[Double]])
+
+  /** Force FULL output materialization through the noop sink. r14 audit:
+    * under `.count()` Catalyst's column pruning + unique-key outer-join
+    * elimination gutted several rows to a bare parquet scan —
+    * dedup_substrings' count plan was literally `count(1) over Relation`
+    * (probed 0.4 s counted vs 40+ s materialized), token_count and
+    * curate_filters_map lost all their per-doc computation, and
+    * shuffle_export shuffled only the 32-byte key. The noop sink executes
+    * the exact output schema every engine consumer would receive and
+    * discards it executor-side — no driver collect, no files. */
+  private def noop(frame: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => Unit =
+    (spark, dir) => frame(spark, dir).write.format("noop").mode("overwrite").save()
+
+  /** Min of N reps per row: the container's vCPUs see bursty steal, and
+    * min is the noise-robust estimator under one-sided interference. Rows
+    * whose runs swung past that (round 6: a 2.325 s dedup_minhash_lsh
+    * that a rerun measured at 0.699 s; r12: route_text and the ANN probes
+    * at 2-4× steal spikes; r21: dedup_substrings and dclm_e2e, whose
+    * committed max/min spread exceeded 2×) get five reps instead of three;
+    * the query name keys its 1×, skew and x10 rows alike. */
+  private val wideNoise = Set("dedup_minhash_lsh", "dedup_minhash_lsh_capped",
+    "pipeline_e2e", "route_text", "embed_topk_lsh", "embed_topk",
+    "embed_neardup", "tfidf_topk", "dedup_substrings", "dclm_e2e")
+
+  /** The row timing registered query `query` on `corpus`. */
+  def query(query: String, corpus: Corpus = Sf, prefix: String = ""): Row =
+    Row(prefix + query, corpus, if (wideNoise(query)) 5 else 3,
+      noop((spark, dir) => SparkEntry.queries(query)(spark, dir)))
+
+  private def docs(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/documents.parquet")
+
+  private def embeddings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+
+  private def substr(hotKeyThreshold: Long) = noop((spark, dir) =>
+    graft.pipeline.Dedup.dedupSubstrings(docs(spark, dir),
+      col("doc_id"), col("text"), k = 8, hotKeyThreshold = hotKeyThreshold))
+
+  private def semDedup(nCentroids: Int, maxClusterSize: Int = 0,
+                       saltBlockSize: Int = 256) = noop((spark, dir) =>
+    graft.pipeline.Similarity.semDedup(embeddings(spark, dir),
+      threshold = 0.3, nCentroids = nCentroids, lloydIters = 2,
+      maxClusterSize = maxClusterSize, saltBlockSize = saltBlockSize))
+
+  private def d4(nCentroids: Int) = noop((spark, dir) =>
+    graft.pipeline.Similarity.d4(embeddings(spark, dir), threshold = 0.3,
+      dropFraction = 0.3, nCentroids = nCentroids, lloydIters = 2))
+
+  /** `body` under spark.graft.staging=reliable, restoring whatever the
+    * conf held before (r18 ADVICE: hardcoding "local" afterwards would
+    * clobber a non-default mode for every later row). */
+  private def reliable(body: (SparkSession, String) => Unit)
+      : (SparkSession, String) => Unit = { (spark, dir) =>
+    spark.sparkContext.setCheckpointDir(
+      s"${System.getProperty("java.io.tmpdir")}/graft-bench-ckpt")
+    val prev = spark.conf.getOption(graft.pipeline.Staging.ConfKey)
+    spark.conf.set(graft.pipeline.Staging.ConfKey, "reliable")
+    try body(spark, dir)
+    finally prev match {
+      case Some(v) => spark.conf.set(graft.pipeline.Staging.ConfKey, v)
+      case None    => spark.conf.unset(graft.pipeline.Staging.ConfKey)
     }
-    // Min of N measured reps per query: the container's vCPUs see bursty
-    // steal (same binary, same data: 0.4 s vs 2.9 s run-to-run; the composed
-    // pipeline_e2e spans many job boundaries and swings 2-10 s), and min is
-    // the noise-robust point estimate under one-sided interference noise —
-    // every rep does the full sf-dir read, so no work is hidden, only
-    // scheduler interference. The LSH rows get FIVE reps instead of three:
-    // round 6 published a 2.325 s dedup_minhash_lsh that a rerun measured at
-    // 0.699 s — all three reps had landed in one steal window. More reps (not
-    // a different estimator) is the fix: min stays comparable round-over-
-    // round, while median would sit on top of whatever noise the middle rep
-    // caught.
-    // pipeline_e2e spans many job boundaries and measured 1.5-2.7 s
-    // run-to-run under scheduler steal — same fix as the LSH rows: more
-    // reps, min stays the comparable estimator.
-    // route_text and the ANN probe rows joined the set in round 12: the
-    // published r11 numbers (route_text 0.799, x10_embed_topk_lsh 1.956)
-    // were 2-4× one-sided steal spikes that min-of-3 failed to reject
-    // (idle reruns: 0.524 / 0.498). The base name keys both the 1× and
-    // x10/skew variants of a query.
-    // r21 (r20 verdict #6, variance discipline): rows whose committed
-    // max/min spread exceeded 2× between same-code runs get five reps —
-    // dedup_substrings (its base name also keys the longdoc/skew/x10
-    // variants, the 2-3× swingers of the r20 record) and dclm_e2e (the
-    // r20 round's med swung 12.8-17.4 s under driver load while idle
-    // runs read ~4 s). Additions-only: no existing row's timing loop or
-    // estimator changed, reps ride along in the spread record.
-    val wideNoise = Set("dedup_minhash_lsh", "dedup_minhash_lsh_capped",
-      "pipeline_e2e", "route_text", "embed_topk_lsh", "embed_topk",
-      "embed_neardup", "tfidf_topk",
-      "dedup_substrings", "dclm_e2e")
-    // r19 (verdict #4): per-ROW spread telemetry. Every published row keeps
-    // min as its point estimate (noise-robust under one-sided steal, the
-    // established round-over-round unit), but the full rep vector is
-    // recorded so BENCH_LATEST.json carries min/median/max per row — cross-
-    // run deltas (the driver re-run swung x10_slimpajama_e2e 68% vs the
-    // committed idle run) can then be judged against a MEASURED band
-    // instead of a remembered one.
-    val repTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def rec(row: String, ts: Seq[Double]): (String, Double) = {
-      repTimes(row) = ts
-      row -> ts.min
-    }
-    def timesOfN(name: String, dir: String): Seq[Double] = {
-      val reps = if (wideNoise(name)) 5 else 3
-      (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { force(name, dir) }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val results = headline.map(name => rec(name, timesOfN(name, sfDir)))
-    // Degenerate-skew rows: same queries, mass-duplicated corpus. Staging
-    // time is excluded (it is test-fixture construction, not query work);
-    // each measured rep still reads the skewed parquet from disk. Skewed
-    // queries outside the headline set also get a uniform comparator row;
-    // neither counts toward the round-over-round total.
-    // uniform comparator rows are measured BEFORE any staging write: a
-    // just-finished multi-hundred-MB corpus write leaves GC/page-cache
-    // pressure that outlasts min-of-3 (measured: a comparator row 5×
-    // slower right after stageX10 vs identical in isolation)
-    val skewComparators =
-      skewed.filterNot(headline.contains)
-        .map(name => rec(name, timesOfN(name, sfDir)))
+  }
+
+  /** Production-parameter IVFADC (nCells=256, m=16, k=256 — the class
+    * where r15's typedlit cross-dot map exploded codegen; the broadcast
+    * cross-dot table makes it a ~8 MB data question) with FAISS-style
+    * sampled codebook training on `trainFraction` of the corpus. */
+  private def ivfPq(trainFraction: Double, iters: Int)(spark: SparkSession,
+                                                       dir: String): DataFrame =
+    graft.pipeline.Similarity.ivfPqTopK(embeddings(spark, dir),
+      embeddings(spark, dir).filter(col("vec_id") % 100 === 0),
+      topK = 5, nCells = 256, m = 16, k = 256, iters = iters, nProbe = 3,
+      trainFraction = trainFraction)
+
+  /** 512 greedy steps through the KV-cached TinyLlm decode on the
+    * partition-batched Exec.llmInference path (r19): the registered
+    * llm_inference pair is fixed-cost-dominated (an 8-step decode is far
+    * below the job floor), so this deep pair is the data-dominated scale
+    * evidence for the inference plane. repartition(32) on both sides: the
+    * sf fixture is one row group, and without it the 1× side decodes on
+    * ONE core while the staged x10 side gets ten (the r14 longdoc lesson).
+    * Greedy decode is prefix-stable (TinyLlmSpec), so this measures the
+    * same model the oracle replays, just deeper. */
+  private def llmDeep(spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    // coalesce: a NULL text row must not surface as a null Dataset
+    // element (the model guards empty, not null-from-concat)
+    val users = docs(spark, dir)
+      .select(concat(lit("Input data (or flow file content):\n"),
+        substring(coalesce(col("text"), lit("")), 1,
+          graft.ops.TinyLlm.ContentWindow),
+        lit("\n\nDescribe.")).as("u")).as[String]
+      .repartition(32)
+    graft.ops.Exec.llmInference(users,
+        u => graft.ops.TinyLlm.render(
+          graft.ops.TinyLlm.generate(u, steps = 512)._1))
+      .write.format("noop").mode("overwrite").save()
+  }
+
+  /** Every measured row, in publication order. Skew and x10 rows pair
+    * with a uniform row of the same query measured this same run (the
+    * headline row, or a comparator row added here); the ratio is the
+    * robustness / near-linearity evidence. */
+  def rows: Seq[Row] = {
+    val skewComparators = skewed.filterNot(headline.contains)
     val x10Comparators =
       x10.filterNot(n => headline.contains(n) || skewed.contains(n))
-        .map(name => rec(name, timesOfN(name, sfDir)))
-    val skewDir = stageSkewed(spark, sfDir)
-    val skewResults =
-      skewComparators ++
-      skewed.map(name => rec(s"skew_$name", timesOfN(name, skewDir)))
-    // Scale-decade rows: same queries, a 10× corpus staged from the sf
-    // documents (staging time excluded — fixture construction, not query
-    // work). Each x10_* row pairs with a 1× row measured this same run
-    // (headline or uniform comparator); the ratio is the near-linearity
-    // evidence. Queries outside the headline set get their uniform
-    // comparator row exactly like the skewed set does.
-    val x10Dir = stageX10(spark, sfDir)
-    // Pin a warm pass AT the x10 scale before measuring: r13's
-    // x10_dedup_minhash_lsh published 0.723 s against a 1.051 s idle
-    // rerun — this row's second >30% excursion in three rounds. The
-    // sf0.01 warm-up tiers the codegen but leaves the first x10-scale rep
-    // with cold page cache and un-scaled JIT profiles; one unmeasured
-    // x10 pass makes every measured rep steady-state in both directions.
-    x10.foreach { name =>
-      try force(name, x10Dir)
-      catch { case e: Throwable => System.err.println(s"[bench] x10 warm $name: $e") }
-    }
-    val x10Results =
-      x10Comparators ++
-      x10.map(name => rec(s"x10_$name", timesOfN(name, x10Dir)))
-    // EXACTSUBSTR long-doc pair (see stageLongDocs): the same registered
-    // query, 16× the tokens per doc — the explode/agg path dominates the
-    // job floor, so THIS pair carries the near-linearity evidence; the
-    // plain dedup_substrings rows above stay as the regression guard.
-    val longDir1 = stageLongDocs(spark, sfDir, "1x")
-    val longDir10 = stageLongDocs(spark, x10Dir, "10x", contentKey = sfDir)
-    Seq(longDir1, longDir10).foreach { d =>
-      try force("dedup_substrings", d)
-      catch { case e: Throwable => System.err.println(s"[bench] long warm: $e") }
-    }
-    val longResults = Seq(
-      rec("longdoc_dedup_substrings", timesOfN("dedup_substrings", longDir1)),
-      rec("x10_longdoc_dedup_substrings",
-        timesOfN("dedup_substrings", longDir10)))
-    // Mass-duplication skew row for EXACTSUBSTR (see stageSubstrSkew):
-    // pairs with longdoc_dedup_substrings above — a hot window key with
-    // ~1,500 copies must stay within the capped-family band, not funnel
-    val substrSkewDir = stageSubstrSkew(spark, longDir1, sfDir)
-    try force("dedup_substrings", substrSkewDir)
-    catch { case e: Throwable => System.err.println(s"[bench] substr skew warm: $e") }
-    val substrSkewResults = Seq(
-      rec("skew_longdoc_dedup_substrings",
-        timesOfN("dedup_substrings", substrSkewDir)))
-    // Mass-duplication EXACTSUBSTR pair (r16, the done-criterion for the
-    // now-implemented hot-key salt): see stageMassDup — ONE window key
-    // with ~0.3·|docs|·10,745 copies (~48M at sf0.1). Unsalted, that key
-    // funnels through ONE count-window partition (probed 11.9 s vs 8.2 s
-    // salted at sf0.1, the gap growing with the hot mass — measured as
-    // the contrast row, min-of-2 like the uncapped semantic-skew row);
-    // with hotKeyThreshold = 100k the heavy-hitter pre-pass salts it
-    // into ~480 sub-partitions and the tail parallelizes.
-    // A FAILED rep records a sentinel (1e9 s), never its wall time: this
-    // pair is a head-to-head comparison, and publishing a crash's
-    // elapsed time as the row would silently invert the conclusion.
-    val massDupDir = stageMassDup(spark, sfDir)
-    def substrOnce(dir: String, thr: Long): Unit =
-      graft.pipeline.Dedup.dedupSubstrings(
-        spark.read.parquet(s"$dir/documents.parquet"),
-        col("doc_id"), col("text"), k = 8, hotKeyThreshold = thr)
-        .write.format("noop").mode("overwrite").save()
-    def substrTimes(dir: String, thr: Long, reps: Int): Seq[Double] =
-      (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { substrOnce(dir, thr); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] massdup: $e"); 1e9 }
+    headline.map(query(_)) ++
+      skewComparators.map(query(_)) ++ skewed.map(query(_, Skew, "skew_")) ++
+      x10Comparators.map(query(_)) ++ x10.map(query(_, X10, "x10_")) ++ Seq(
+        // EXACTSUBSTR long-doc pair (see stageLongDocs): the same query,
+        // 16× the tokens per doc — the explode/agg path dominates the job
+        // floor, so THIS pair carries the near-linearity evidence; the
+        // plain dedup_substrings rows stay as the regression guard. The
+        // skew row (see stageSubstrSkew) pairs with the 1× side: a hot
+        // window key with ~1,500 copies must not funnel.
+        query("dedup_substrings", Long1x, "longdoc_"),
+        query("dedup_substrings", Long10x, "x10_longdoc_"),
+        query("dedup_substrings", SubstrSkew, "skew_longdoc_"),
+        // one window key with ~48M copies at sf0.1 (see stageMassDup).
+        // Unsalted it funnels through ONE count-window partition (probed
+        // 11.9 s vs 8.2 s salted, the gap growing with the mass) — the
+        // deliberately slow contrast gets 2 reps; with hotKeyThreshold =
+        // 100k the heavy-hitter pre-pass salts the key into ~480
+        // sub-partitions (5 reps: same-code runs read 4.3 vs 8.5 s, r20)
+        Row("massdup_dedup_substrings", MassDup, 2, substr(0L), warm = false),
+        Row("massdup_dedup_substrings_salted", MassDup, 5, substr(100000L)),
+        // SemDeDup and D4 scale pairs: a fixed nCentroids would make the
+        // intra-cluster pair join quadratic at 10× BY CONFIG; the paper's
+        // own scale knob is cluster count ∝ corpus (Abbas 2023 §3), which
+        // holds per-cluster population constant, so x10 scales k 8→80.
+        // The 1× rows match dedup_semantic's registered config exactly.
+        Row("dedup_semantic", Sf, 3, semDedup(8)),
+        Row("x10_dedup_semantic", X10, 3, semDedup(80)),
+        Row("d4_e2e", Sf, 3, d4(8)),
+        Row("x10_d4_e2e", X10, 3, d4(80)),
+        // r18: the fault-tolerance mode, priced — durable checkpoints at
+        // every compute-once barrier (results identical by StagingSpec)
+        Row("d4_e2e_reliable", Sf, 3, reliable(d4(8))),
+        // degenerate-cluster contrast set: 70% of vectors are ONE
+        // direction, so the whole mass lands in one cluster. The default
+        // path splits the within-cluster pair join block-wise past
+        // saltBlockSize (r17) and must land near the capped row, not the
+        // _unblocked one (the r16 one-task quadratic: 42.3 s, ~100M cosine
+        // evaluations through ONE task — one rep, no warm, its shape
+        // warmed by the default row)
+        Row("skew_dedup_semantic", EmbSkew, 3, semDedup(80)),
+        Row("skew_dedup_semantic_unblocked", EmbSkew, 1,
+          semDedup(80, saltBlockSize = Int.MaxValue), warm = false),
+        Row("skew_dedup_semantic_capped", EmbSkew, 3,
+          semDedup(80, maxClusterSize = 64)),
+        // r17: trainFraction trains the Lloyd rounds on a deterministic
+        // md5-fraction while the full corpus is still assigned + encoded.
+        // r18: at iters=1 the fraction filter costs about what one Lloyd
+        // round saves, so the deep pair (iters=4, where codebook training
+        // is the bulk of index build) is the regime the knob exists for;
+        // 0.5 of the 20k x10 vectors sits at the FAISS training floor of
+        // ~39·k points (see ivfPqRecall)
+        Row("prod_embed_topk_ivfpq_sampled", X10, 2, noop(ivfPq(0.25, 1))),
+        Row("prod_embed_topk_ivfpq", X10, 2, noop(ivfPq(1.0, 1))),
+        Row("prod_embed_topk_ivfpq_deep_sampled", X10, 3, noop(ivfPq(0.5, 4))),
+        Row("prod_embed_topk_ivfpq_deep", X10, 3, noop(ivfPq(1.0, 4))),
+        // the streaming rows: five reps for the tail drains (r12's
+        // published 10× drain read 39% above an idle rerun)
+        Row("streaming_tail_e2e", Tail1x, 5, tailDrain),
+        Row("x10_streaming_tail_e2e", Tail10x, 5, tailDrain),
+        Row("streaming_neardup_e2e", NearDup1x, 3, neardupDrain),
+        Row("x10_streaming_neardup_e2e", NearDup10x, 3, neardupDrain),
+        Row("llm_generate_deep", Sf, 3, llmDeep),
+        Row("x10_llm_generate_deep", X10, 3, llmDeep)) ++
+      extra.map(query(_))
+  }
+
+  /** The one timing loop. Rows run grouped by corpus: the corpus is
+    * staged once, every row of the group gets one unmeasured warm pass,
+    * then each row runs its `reps` timed reps — so the first timed rep of
+    * a group already sees a JVM warmed by the whole group's code shapes
+    * (one warm per query shape leaves the generic Spark/Catalyst paths
+    * cold: measured 1.2-1.9x slower uniform rows at sf0.01). A row whose
+    * staging, warm pass or any rep throws is logged and comes back as an
+    * error; the loop goes on with the next row. The uniform sf group runs
+    * first, before any staging write: a just-finished multi-hundred-MB
+    * corpus write leaves GC/page-cache pressure that outlasts min-of-3
+    * (measured: a comparator row 5x slower right after stageX10 vs
+    * identical in isolation). Results come back in `rows` order. */
+  def measure(spark: SparkSession, sfDir: String, rows: Seq[Row]): Seq[Result] = {
+    val staged = scala.collection.mutable.Map[String, String]()
+    def attempt[T](row: Row)(run: String => T): Option[T] =
+      try Some(run(staged.getOrElseUpdate(row.corpus.name,
+        row.corpus.stage(spark, sfDir))))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] ${row.name}: $e")
+        None
       }
-    try substrOnce(massDupDir, 100000L) // warm the salted shape at scale
-    catch { case e: Throwable => System.err.println(s"[bench] massdup warm: $e") }
-    val massDupResults = Seq(
-      rec("massdup_dedup_substrings", substrTimes(massDupDir, 0L, 2)),
-      // r21: 5 reps (was 3) — committed same-code runs of this row read
-      // 4.3 vs 8.5 s (r20 record); the unsalted twin stays min-of-2 (a
-      // deliberately slow contrast row, more reps buy nothing)
-      rec("massdup_dedup_substrings_salted",
-        substrTimes(massDupDir, 100000L, 5)))
-    // SemDeDup scale pair: the registered query's fixed nCentroids=8 would
-    // make the intra-cluster pair join quadratic at 10× BY CONFIG (cluster
-    // population ∝ N at fixed k) — the paper's own scale knob is cluster
-    // count ∝ corpus (Abbas 2023 §3 runs 50k clusters on LAION), which
-    // holds per-cluster population (and so pair volume per row) constant.
-    // The x10 row scales k 8→80 accordingly; the pair ratio is the
-    // linearity evidence UNDER the published scaling rule. (The 1× row
-    // here matches dedup_semantic's registered config exactly.)
-    def semDedupOnce(dir: String, nC: Int): Unit =
-      graft.pipeline.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, nCentroids = nC, lloydIters = 2)
-        .write.format("noop").mode("overwrite").save()
-    def semDedupTimes(dir: String, nC: Int): Seq[Double] =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        try semDedupOnce(dir, nC)
-        catch { case e: Throwable => System.err.println(s"[bench] semdedup: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-    semDedupOnce(warmDir, 8); semDedupOnce(x10Dir, 80) // warm both shapes
-    val semResults = Seq(
-      rec("dedup_semantic", semDedupTimes(sfDir, 8)),
-      rec("x10_dedup_semantic", semDedupTimes(x10Dir, 80)))
-    // Full D4 pair, same cluster-count scaling rule as the SemDeDup pair
-    // (k ∝ corpus per Abbas 2023 §3; the re-cluster phase scales with it)
-    def d4Once(dir: String, nC: Int): Unit =
-      graft.pipeline.Similarity.d4(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, dropFraction = 0.3, nCentroids = nC, lloydIters = 2)
-        .write.format("noop").mode("overwrite").save()
-    def d4Times(dir: String, nC: Int): Seq[Double] =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        try d4Once(dir, nC)
-        catch { case e: Throwable => System.err.println(s"[bench] d4: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-    d4Once(warmDir, 8); d4Once(x10Dir, 80)
-    val d4Results = Seq(
-      rec("d4_e2e", d4Times(sfDir, 8)),
-      rec("x10_d4_e2e", d4Times(x10Dir, 80)))
-    // r18 (#7): the 100 TB fault-tolerance mode, priced — the same
-    // d4_e2e row under spark.graft.staging=reliable (durable checkpoint
-    // instead of executor-local blocks at EVERY compute-once barrier;
-    // results identical by StagingSpec). The gap vs d4_e2e is the
-    // per-barrier durable write+read a deployment pays so the heaviest
-    // staged chain survives executor loss.
-    val d4ReliableResults = {
-      spark.sparkContext.setCheckpointDir(
-        s"${System.getProperty("java.io.tmpdir")}/graft-bench-ckpt")
-      // restore whatever the conf held BEFORE the block (r18 ADVICE:
-      // hardcoding "local" in the finally would silently clobber a
-      // non-default spark.graft.staging for all subsequent rows)
-      val prevStaging = spark.conf.getOption(graft.pipeline.Staging.ConfKey)
-      spark.conf.set(graft.pipeline.Staging.ConfKey, "reliable")
-      try {
-        try d4Once(sfDir, 8) // warm the reliable shape
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] d4 reliable warm: $e") }
-        Seq(rec("d4_e2e_reliable", d4Times(sfDir, 8)))
-      } finally prevStaging match {
-        case Some(v) => spark.conf.set(graft.pipeline.Staging.ConfKey, v)
-        case None    => spark.conf.unset(graft.pipeline.Staging.ConfKey)
-      }
-    }
-    // Degenerate-cluster contrast set (r15, mirroring the capped LSH
-    // pair): 70% of the corpus becomes ONE exact direction — identical
-    // quantized vectors score identical cosines to every centroid and
-    // the (negCos, cent) tie-break sends the whole mass to one cluster.
-    // r17: the DEFAULT path is now exact-salted (the within-cluster pair
-    // join splits block-wise past saltBlockSize), so skew_dedup_semantic
-    // measures the default a naive caller gets; _unblocked disables the
-    // salt (saltBlockSize = MaxValue, the r16 one-task quadratic) as the
-    // contrast, and _capped keeps the recall-trade bound. The default
-    // must land near the capped row, not the unblocked one.
-    // staged from the x10 embeddings (20k vectors at sf0.1): at the 1×
-    // corpus's 2,000 vectors the hot cluster's quadratic term is below
-    // the job floor (probed 2.19 vs 2.13 uniform) and the pair proves
-    // nothing — 14k identical vectors make the uncapped pair join ~100M
-    // cosine evaluations, a contrast the cap must visibly bound
-    val embSkewDir = stageEmbSkew(spark, x10Dir, "10x", contentKey = sfDir)
-    def semDedupCappedOnce(dir: String, nC: Int, cap: Int): Unit =
-      graft.pipeline.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, nCentroids = nC, lloydIters = 2,
-        maxClusterSize = cap)
-        .write.format("noop").mode("overwrite").save()
-    def semDedupCappedTimes(dir: String, nC: Int, cap: Int): Seq[Double] =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        try semDedupCappedOnce(dir, nC, cap)
-        catch { case e: Throwable => System.err.println(s"[bench] semdedup cap: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-    // the default (salted-exact) and capped rows get the usual warm +
-    // min-of-3; the unblocked row is the deliberately-adversarial
-    // contrast (r16 measured 42.3 s — ~100M cosine evaluations through
-    // ONE task) and gets ONE rep with no separate warm: its code shape
-    // is warmed by the other rows, and burning 80+ s on more reps of a
-    // row whose point is an order-of-magnitude gap buys nothing. A
-    // failed rep records the 1e9 sentinel (head-to-head contrast rows
-    // must never publish a crash's wall time as a measurement).
-    def semDedupUnblockedOnce(dir: String, nC: Int): Unit =
-      graft.pipeline.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, nCentroids = nC, lloydIters = 2,
-        saltBlockSize = Int.MaxValue)
-        .write.format("noop").mode("overwrite").save()
-    semDedupOnce(embSkewDir, 80); semDedupCappedOnce(embSkewDir, 80, 64)
-    val semSkewResults = Seq(
-      rec("skew_dedup_semantic", semDedupTimes(embSkewDir, 80)),
-      rec("skew_dedup_semantic_unblocked", Seq({
-        val t0 = System.nanoTime()
-        try { semDedupUnblockedOnce(embSkewDir, 80)
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] semskew unblocked: $e"); 1e9 }
-      })),
-      rec("skew_dedup_semantic_capped",
-        semDedupCappedTimes(embSkewDir, 80, 64)))
-    // Production-parameter IVFADC row (r16, the plan-literal-purge
-    // done-criterion): nCells=256, m=16, k=256 on the x10 embeddings —
-    // the parameter class where r15's typedlit cross-dot map (nCells·m·k
-    // plan entries) exploded codegen; the broadcast cross-dot table makes
-    // it a ~8 MB data question. min-of-2 (a completion-and-band probe,
-    // like the uncapped skew contrast rows), warmed once.
-    // r17: FAISS-style sampled codebook training (trainFraction) — the
-    // Lloyd rounds (the honest bulk of the r16 51.6 s) run on a
-    // deterministic 25% md5-fraction while the full corpus is still
-    // assigned + encoded; the _sampled row is the production
-    // configuration, the full-train row stays as the contrast.
-    def ivfPqProd(dir: String, tf: Double, iters: Int) =
-      graft.pipeline.Similarity.ivfPqTopK(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        spark.read.parquet(s"$dir/embeddings.parquet")
-          .filter(col("vec_id") % 100 === 0),
-        topK = 5, nCells = 256, m = 16, k = 256, iters = iters, nProbe = 3,
-        trainFraction = tf)
-    def ivfPqProdOnce(dir: String, tf: Double, iters: Int = 1): Unit =
-      ivfPqProd(dir, tf, iters)
-        .write.format("noop").mode("overwrite").save()
-    try ivfPqProdOnce(x10Dir, 0.25) // warm; guarded like every other warm pass
-    catch { case e: Throwable => System.err.println(s"[bench] ivfpq prod warm: $e") }
-    def ivfPqProdTimes(tf: Double, reps: Int, iters: Int = 1): Seq[Double] =
-      (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { ivfPqProdOnce(x10Dir, tf, iters); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ivfpq prod: $e"); 1e9 }
-      }
-    // r18 (#3): the depth contrast where Lloyd dominates. At iters=1 the
-    // md5-fraction filter pass costs roughly what one Lloyd round saves
-    // (r17 measured _sampled 4.90 vs full 4.39 s), so the trainFraction
-    // knob shows nothing there. At production training depth (iters=4;
-    // FAISS's own defaults run 10-25 rounds) codebook training is the
-    // bulk of index-build cost — the regime the knob exists for. The
-    // _deep_sampled fraction is 0.5, the FAISS training floor at THIS
-    // corpus: k=256 codebooks want >= ~39·k ≈ 10k training points
-    // (faiss's own min_points_per_centroid warning), and 0.5 of the 20k
-    // x10 corpus sits exactly there — an r18 probe at 0.1 (2k points)
-    // cost 6 recall points (12.5% vs 18.4% @5), the under-training the
-    // floor exists to prevent. At deployment scale the floor is
-    // trivially cleared (39·k of a billion-vector corpus is fraction
-    // 1e-5), so trainFraction is a SCALE knob, not a small-corpus knob.
-    // The warm passes double as the recall telemetry: recall@5 vs the
-    // brute-force ground truth across the fraction ladder — sampling at
-    // the floor must hold recall within noise of full training (raw set
-    // agreement between variants is the WRONG metric: differently-
-    // trained codebooks legitimately reorder a top-k whose tail cosines
-    // tie near-exactly).
-    def deepTopkSet(tf: Double): Set[(Long, Long)] =
-      ivfPqProd(x10Dir, tf, iters = 4).select(col("qid"), col("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    try {
-      val brute = graft.pipeline.Similarity.bruteForceTopK(
-        spark.read.parquet(s"$x10Dir/embeddings.parquet"),
-        spark.read.parquet(s"$x10Dir/embeddings.parquet")
-          .filter(col("vec_id") % 100 === 0), 5)
-        .select(col("qid"), col("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      def recall(tf: Double): Double =
-        (deepTopkSet(tf) & brute).size.toDouble / math.max(1, brute.size)
-      System.err.println(f"[bench] ivfpq deep recall@5 vs brute force: " +
-        f"full-train ${100 * recall(1.0)}%.1f%%, " +
-        f"sampled(0.5, the 39·k floor) ${100 * recall(0.5)}%.1f%%, " +
-        f"sampled(0.1, under the floor) ${100 * recall(0.1)}%.1f%%")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ivfpq deep warm/recall: $e") }
-    // r19 (verdict #3): the deep pair at reps=3 — the r18 min-of-2
-    // direction flipped between the committed run and the driver's re-run
-    // (6.832/7.851 vs 7.449/6.573), so min-of-2 cannot establish a timing
-    // direction on this ~7 s row class. The per-row spread now published
-    // alongside is the evidence either way: if the min±spread bands
-    // overlap, the honest claim is "within run variance at this corpus".
-    val ivfPqProdResults = Seq(
-      rec("prod_embed_topk_ivfpq_sampled", ivfPqProdTimes(0.25, 2)),
-      rec("prod_embed_topk_ivfpq", ivfPqProdTimes(1.0, 2)),
-      rec("prod_embed_topk_ivfpq_deep_sampled",
-        ivfPqProdTimes(0.5, 3, iters = 4)),
-      rec("prod_embed_topk_ivfpq_deep", ivfPqProdTimes(1.0, 3, iters = 4)))
-    // Streaming rows: every other row is batch; these measure the DSv2
-    // tail source + stateful defragment + partitioned streaming sink at
-    // 1× and 10× (corpora staged from the same sf/x10 documents; staging
-    // excluded as fixture construction). One warm drain at the warm-up
-    // scale pays the streaming plane's one-time codegen, like the batch
-    // warm-up does.
-    tailDrainSeconds(spark, stageTailCorpus(spark, warmDir, "warm"))
-    // mult=30 per the round-11 finding (see stageTailCorpus): the drain
-    // must be data-dominated before the 1×/x10 pair means anything. The
-    // *_lines_per_sec rows carry the throughput number directly (the only
-    // non-seconds rows in the map; the name is the unit).
-    val tail1x = stageTailCorpus(spark, sfDir, "1x", mult = 30)
-    val tail10x = stageTailCorpus(spark, x10Dir, "10x", mult = 30,
-      contentKey = sfDir)
-    val lines1x = spark.read.textFile(tail1x).count()
-    val lines10x = spark.read.textFile(tail10x).count()
-    // FIVE reps like the wide-noise batch rows: r12's published 10× drain
-    // read 39% above an idle rerun (9.671 s vs 5.940 s) — min-of-3 still
-    // let a steal window through on the longest-running row class
-    val drain1xTimes = (0 until 5).map(_ => tailDrainSeconds(spark, tail1x))
-    val drain10xTimes = (0 until 5).map(_ => tailDrainSeconds(spark, tail10x))
-    val drain1x = drain1xTimes.min
-    val drain10x = drain10xTimes.min
-    // Streaming near-dup pair (r17): the tail drain's 1×/x10 device —
-    // mult=10 suffix-disjoint replicas make the drain data-dominated
-    // (see stageNearDupCorpus; at mult=1 both sides sat on the ~5 s
-    // streaming fixed floor), banding is map-side, bucket state capped.
-    neardupDrainSeconds(spark,
-      stageNearDupCorpus(spark, warmDir, "warm", mult = 10))
-    val nd1x = stageNearDupCorpus(spark, sfDir, "1x", mult = 10)
-    val nd10x = stageNearDupCorpus(spark, x10Dir, "10x", mult = 10,
-      contentKey = sfDir)
-    val nd1xTimes = (0 until 3).map(_ => neardupDrainSeconds(spark, nd1x))
-    val nd10xTimes = (0 until 3).map(_ => neardupDrainSeconds(spark, nd10x))
-    val streamResults = Seq(
-      rec("streaming_tail_e2e", drain1xTimes),
-      rec("x10_streaming_tail_e2e", drain10xTimes),
-      rec("streaming_neardup_e2e", nd1xTimes),
-      rec("x10_streaming_neardup_e2e", nd10xTimes))
-    // Deep-decode inference pair (r19): the registered llm_inference pair
-    // is FIXED-COST-dominated (8-step decode over a 70-token context is
-    // ~18k int64 mults per doc — far below the job floor at 50k docs, the
-    // r13 dedup_substrings lesson), so the DATA-dominated scale evidence
-    // for the inference plane is this pair: 512 greedy steps through the
-    // KV-cached decode (the llama.cpp architecture — k/v projected once
-    // per position, each step O(d² + n·d)) on the partition-batched
-    // Exec.llmInference path. repartition(32) on BOTH sides: the sf
-    // fixture is one row group, and without it the 1× side decodes on ONE
-    // core while the staged x10 side gets ten — the r14 longdoc lesson
-    // (the first cut of this pair measured 8.2 vs 8.6 s: pure parallelism
-    // skew, not data cost). Greedy decode is prefix-stable (TinyLlmSpec),
-    // so this measures the SAME model the oracle replays, just deeper.
-    def llmDeepSeconds(dir: String): Double = {
-      import spark.implicits._
+    def timed(row: Row)(dir: String): Seq[Double] = (0 until row.reps).map { _ =>
       val t0 = System.nanoTime()
-      try {
-        // coalesce: a NULL text row must not surface as a null Dataset
-        // element (the model guards empty, not null-from-concat)
-        val users = spark.read.parquet(s"$dir/documents.parquet")
-          .select(concat(lit("Input data (or flow file content):\n"),
-            substring(coalesce(col("text"), lit("")), 1,
-              graft.ops.TinyLlm.ContentWindow),
-            lit("\n\nDescribe.")).as("u")).as[String]
-          .repartition(32)
-        graft.ops.Exec.llmInference(users,
-            u => graft.ops.TinyLlm.render(
-              graft.ops.TinyLlm.generate(u, steps = 512)._1))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        // the 1e9 sentinel, same as substrTimes/semskew (r19 ADVICE): a
-        // failed rep must be visible in BENCH_LATEST, not pass off its
-        // partial wall time as a valid timing
-        case e: Throwable =>
-          System.err.println(s"[bench] llm deep: $e"); 1e9
-      }
+      row.body(spark, dir)
+      (System.nanoTime() - t0) / 1e9
     }
-    llmDeepSeconds(warmDir) // warm the shape (failures self-log + sentinel)
-    val llmDeepResults = Seq(
-      rec("llm_generate_deep", (0 until 3).map(_ => llmDeepSeconds(sfDir))),
-      rec("x10_llm_generate_deep",
-        (0 until 3).map(_ => llmDeepSeconds(x10Dir))))
-    // throughput rows live in their own section with an explicit unit —
-    // every row in `queries` is seconds, so round-over-round tooling can
-    // no longer mix 1e6-lines/s values into a seconds comparison.
-    // r20 (verdict #3): the NEARDUP pair gets a docs/s basis too — the
-    // driver's post-commit rerun swung the trigger-drain WALL rows up to
-    // 13× under machine load while compute rows stayed in band, so
-    // cross-run comparisons of the streaming pairs should read the
-    // work-normalized rate (each name carries its unit)
-    val ndDocs1x = spark.read.parquet(s"$nd1x/documents.parquet").count()
-    val ndDocs10x = spark.read.parquet(s"$nd10x/documents.parquet").count()
+    val times = rows.map(_.corpus).distinct.sortBy(_ != Sf).flatMap { corpus =>
+      val group = rows.filter(_.corpus == corpus)
+      val warmed = group.filter(row =>
+        attempt(row)(dir => if (row.warm) row.body(spark, dir)).isDefined)
+      group.map(row => row.name ->
+        (if (warmed.contains(row)) attempt(row)(timed(row)) else None))
+    }.toMap
+    rows.map(row => Result(row.name, times(row.name)))
+  }
+
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** The full record and the compact summary line for `results`. `queries`
+    * publishes each row's min (the point estimate) and `spread` its
+    * min/median/max and rep count; an errored row reads "error" in both
+    * and is left out of `headline_sum` (the sum over the `headline` rows),
+    * `sum_all_rows` and `top10`, and counts toward the summary's `errors`.
+    * The summary stays well under a ~2 KB stdout tail capture, so the
+    * last stdout line always holds one complete parseable object; `full`
+    * names the file holding the full record. */
+  def report(results: Seq[Result], headline: Seq[String],
+             throughput: Seq[(String, Option[Double])], sfDir: String,
+             full: String): (String, String) = {
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val timed = results.collect { case Result(k, Some(ts)) => k -> ts.min }
+    val qs = obj(results.map(r => r.name -> r.times.fold("\"error\"")(ts => f3(ts.min))))
+    val spread = obj(results.map(r => r.name -> r.times.fold("\"error\"") { ts =>
+      s"""{"min":${f3(ts.min)},"med":${f3(median(ts))},"max":${f3(ts.max)},"reps":${ts.size}}"""
+    }))
+    val tp = obj(throughput.map { case (k, v) =>
+      k -> v.fold("\"error\"")("%.0f".formatLocal(java.util.Locale.ROOT, _)) })
+    val total = f3(timed.filter(t => headline.contains(t._1)).map(_._2).sum)
+    val sumAll = f3(timed.map(_._2).sum)
+    val top10 = obj(timed.sortBy(-_._2).take(10).map { case (k, v) => k -> f3(v) })
+    val head = s""""metric":"headline_sum","value":$total,"unit":"sec","sum_all_rows":$sumAll"""
+    (s"""{$head,"queries":$qs,"spread":$spread,"throughput":{"unit":"per_sec (suffix carries the basis)","rows":$tp},"sf":"$sfDir"}""",
+     s"""{$head,"sf":"$sfDir","rows":${results.size},"errors":${results.size - timed.size},"full":"$full","throughput":$tp,"top10":$top10}""")
+  }
+
+  /** IVF-PQ recall@5 against brute force across the trainFraction ladder
+    * at production training depth, printed once (telemetry, not a row).
+    * Sampling at the FAISS floor (k=256 codebooks want >= ~39·k ≈ 10k
+    * training points: 0.5 of the 20k x10 vectors at sf0.1) must hold
+    * recall within noise of full training; an r18 probe at 0.1 (2k
+    * points) cost 6 recall points. Raw set agreement between variants is
+    * the WRONG metric: differently-trained codebooks legitimately reorder
+    * a top-k whose tail cosines tie near-exactly. */
+  private def ivfPqRecall(spark: SparkSession, x10Dir: String): Unit = {
+    def pairs(df: DataFrame): Set[(Long, Long)] = df.select(col("qid"), col("cid"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = pairs(graft.pipeline.Similarity.bruteForceTopK(
+      embeddings(spark, x10Dir),
+      embeddings(spark, x10Dir).filter(col("vec_id") % 100 === 0), 5))
+    def recall(tf: Double): Double = 100.0 *
+      (pairs(ivfPq(tf, iters = 4)(spark, x10Dir)) & brute).size / math.max(1, brute.size)
+    System.err.println("[bench] ivfpq deep recall@5 vs brute force: " +
+      "full-train %.1f%%, sampled(0.5, the 39·k floor) %.1f%%, sampled(0.1, under the floor) %.1f%%"
+        .formatLocal(java.util.Locale.ROOT, recall(1.0), recall(0.5), recall(0.1)))
+  }
+
+  /** The sf dir the mains measure: `SPARK_GRAFT_SF_DIR`. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  def main(args: Array[String]): Unit = {
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
+    val results = measure(spark, sfDir, rows)
+    try ivfPqRecall(spark, X10.stage(spark, sfDir))
+    catch { case e: Throwable => System.err.println(s"[bench] ivfpq recall: $e") }
+    // throughput rows carry an explicit unit in their name — every row in
+    // `queries` is seconds. The near-dup pair gets a docs/s basis too:
+    // under machine load the trigger-drain wall rows swung up to 13×
+    // while compute rows stayed in band (r20), so cross-run comparisons
+    // of the streaming pairs should read the work-normalized rate.
+    def rate(row: String, corpus: Corpus, count: String => Long): Option[Double] =
+      results.find(_.name == row).flatMap(_.times)
+        .map(ts => count(corpus.stage(spark, sfDir)) / ts.min)
+    val lines = (dir: String) => spark.read.textFile(dir).count()
+    val docCount = (dir: String) => docs(spark, dir).count()
     val throughput = Seq(
-      "streaming_tail_lines_per_sec" -> lines1x / drain1x,
-      "x10_streaming_tail_lines_per_sec" -> lines10x / drain10x,
-      "streaming_neardup_docs_per_sec" -> ndDocs1x / nd1xTimes.min,
-      "x10_streaming_neardup_docs_per_sec" -> ndDocs10x / nd10xTimes.min)
-    // total stays headline-only (round-over-round comparable); the skew_*,
-    // x10_* and streaming rows ride along in the queries map for the
-    // comparisons
-    val extraResults = extra.map(name => rec(name, timesOfN(name, sfDir)))
-    val allRows = results ++ skewResults ++ x10Results ++ longResults ++
-      substrSkewResults ++ massDupResults ++ semResults ++ d4Results ++
-      d4ReliableResults ++
-      semSkewResults ++ ivfPqProdResults ++ streamResults ++
-      llmDeepResults ++ extraResults
-    val qs = allRows
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    // per-row rep spread (verdict #4): min is the published point estimate
-    // (same estimator as `queries`); med/max bound the band one idle run
-    // actually spans, so a cross-run delta can be judged against it
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    val spread = repTimes.toSeq.map { case (k, ts) =>
-      "\"" + k + "\":{" +
-        f""""min":${ts.min}%.3f,"med":${median(ts)}%.3f,"max":${ts.max}%.3f,"reps":${ts.size}}"""
-    }.mkString("{", ",", "}")
-    val tp = throughput.map { case (k, v) => "\"" + k + f"\":$v%.0f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val sumAll = allRows.map(_._2).sum
-    val json = f"""{"metric":"headline_sum","value":$total%.3f,"unit":"sec","sum_all_rows":$sumAll%.3f,"queries":$qs,"spread":$spread,"throughput":{"unit":"per_sec (suffix carries the basis)","rows":$tp},"sf":"$sfDir"}"""
-    // The driver's tail-capture window is smaller than this full ~6 KB
-    // line — r15/r16/r17 all arrived HEAD-cut mid-JSON (BENCH_r{N}.json
-    // parsed: null). So: print the full line early + persist it to
-    // BENCH_LATEST.json (the canonical full row set), and make the LAST
-    // printed line a compact summary JSON (total, sf, throughput, top-10
-    // slowest rows) well under the ~2 KB window, so the driver's tail
-    // always holds one complete parseable object.
-    println(json)
-    System.out.flush()
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LATEST.json"),
+      "streaming_tail_lines_per_sec" -> rate("streaming_tail_e2e", Tail1x, lines),
+      "x10_streaming_tail_lines_per_sec" -> rate("x10_streaming_tail_e2e", Tail10x, lines),
+      "streaming_neardup_docs_per_sec" -> rate("streaming_neardup_e2e", NearDup1x, docCount),
+      "x10_streaming_neardup_docs_per_sec" ->
+        rate("x10_streaming_neardup_e2e", NearDup10x, docCount))
+    // the full record is keyed by core count, so runs at different core
+    // counts no longer overwrite each other's
+    val full = s"BENCH_LATEST_c$cpus.json"
+    val (json, summary) = report(results, headline, throughput, sfDir, full)
+    java.nio.file.Files.write(java.nio.file.Paths.get(full),
       (json + "\n").getBytes("UTF-8"))
-    val top10 = allRows.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    // r19 (verdict #6): "value" stays the headline-subset sum (the stable
-    // round-over-round unit); "sum_all_rows" is the sum over every row in
-    // "rows", so the compact object reads correctly once parsed. With
-    // `run / outputStrategy := StdoutOutput` in build.sbt (verdict #1) this
-    // last line prints RAW — no sbt "[info] " prefix — so the driver's
-    // per-line json.loads finally succeeds.
-    val summary = f"""{"metric":"headline_sum","value":$total%.3f,"unit":"sec","sum_all_rows":$sumAll%.3f,"sf":"$sfDir","rows":${allRows.size},"full":"BENCH_LATEST.json","throughput":$tp,"top10":$top10}"""
+    println(json)
     spark.stop()
-    println(json); System.out.flush()
     println(summary)
     System.out.flush()
   }

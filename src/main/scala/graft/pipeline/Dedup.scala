@@ -457,7 +457,7 @@ object Dedup {
    * Returns (docId, nTokens, nRemoved, text) with the covered tokens cut
    * out and the remainder re-joined on single spaces.
    *
-   * Scale shape (re-profiled r14 SubstrProbe; detection REWORKED r15;
+   * Scale shape (re-profiled r14; detection REWORKED r15;
    * key hash swapped r20): the window explode is linear in corpus
    * tokens. The key is 128 bits carried as two longs — xxhash64 of the
    * window slice under two distinct seeds (Spark's default 42 and a

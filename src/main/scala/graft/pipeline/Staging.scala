@@ -31,25 +31,28 @@ object Staging {
   val ConfKey = "spark.graft.staging"
 
   /** Dev-only (r20 verdict #5): when set, every EAGER staging barrier
-    * also writes its segment's AQE-final `.explain("formatted")` to
-    * `<dir>/staged-<n>.txt` — so PlanDump's committed evidence for the
-    * composed pipelines shows the pre-barrier stages a localCheckpoint
-    * otherwise truncates. Off by default; one conf lookup per barrier
-    * (the same lookup path the mode switch already pays). */
+    * that executes (modes `local` and `reliable`) also writes its
+    * segment's AQE-final `.explain("formatted")` to
+    * `<dir>/staged-<n>.txt` — so `Probe plan` output for the composed
+    * pipelines shows the pre-barrier stages a localCheckpoint otherwise
+    * truncates. Off by default; one conf lookup per barrier (the same
+    * lookup path the mode switch already pays). */
   val DumpDirKey = "spark.graft.staging.dumpDir"
   private val dumpSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def stage(df: DataFrame): DataFrame = stage(df, eager = true)
 
   def stage(df: DataFrame, eager: Boolean): DataFrame = {
-    val out = df.sparkSession.conf.getOption(ConfKey).getOrElse("local") match {
+    val mode = df.sparkSession.conf.getOption(ConfKey).getOrElse("local")
+    val out = mode match {
       case "local"    => df.localCheckpoint(eager)
       case "reliable" => df.checkpoint(eager)
       case "none"     => df
       case other => throw new IllegalArgumentException(
         s"$ConfKey=$other (expected local | reliable | none)")
     }
-    if (eager) df.sparkSession.conf.getOption(DumpDirKey).foreach { dir =>
+    // under `none` nothing executed, so there is no final plan to dump
+    if (eager && mode != "none") df.sparkSession.conf.getOption(DumpDirKey).foreach { dir =>
       // the eager checkpoint just executed `df`, so this is the final plan
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -64,6 +64,18 @@ class StagingSpec extends SparkSpec {
     assert(wrote != null && wrote.nonEmpty)
   }
 
+  test("the plan dump writes a segment only when the barrier executed") {
+    def dumps(mode: String): Int = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-dump").toFile
+      spark.conf.set(Staging.DumpDirKey, dir.toString)
+      try withMode(mode) { Staging.stage(docs).collect() }
+      finally spark.conf.unset(Staging.DumpDirKey)
+      Option(dir.listFiles()).fold(0)(_.length)
+    }
+    assert(dumps("none") === 0)
+    assert(dumps("local") === 1)
+  }
+
   test("an unknown staging mode fails loudly, not silently") {
     withMode("banana") {
       val ex = intercept[IllegalArgumentException] { bm25Rows() }
