@@ -15,9 +15,11 @@ import graft.sources.Sinks
  * is a lazily-composed DataFrame — Catalyst sees the whole flow as a
  * single plan per terminal edge, so routing filters push down across
  * processor boundaries (something the reference's queue-per-connection
- * runtime cannot do). Scheduling strategies/periods map to Structured
- * Streaming triggers in streaming mode (streaming/FlowRuntime.trigger) and
- * are no-ops in a batch sweep.
+ * runtime cannot do). Scheduling strategies/periods are no-ops in a batch
+ * sweep. The connection wiring ([[FlowRunner.wire]]) is the same walk the
+ * streaming query uses ([[FlowStreaming.assemble]]), so both modes apply
+ * relationship selection, `flowfile expiration`, `drop empty` and clone
+ * lineage alike; only the per-processor dispatch differs.
  *
  * Cycles (retry loops, e.g. InvokeHTTP -> RetryFlowFile -> InvokeHTTP in
  * examples/http_post_config.yml) cannot exist in one batch sweep: back
@@ -48,7 +50,6 @@ object FlowRunner {
   }
 
   def run(spark: SparkSession, flow: FlowDef,
-          materializeFanOut: Boolean = true,
           variables: Map[String, String] = Map.empty): FlowResult = {
     // the variable registry backs ${'name'} refs for attributes that do
     // not exist on the FlowFile (minifi.properties plane); the binding is
@@ -56,16 +57,45 @@ object FlowRunner {
     // builds don't race and nothing leaks to EL compiled outside a run —
     // the compiled plans embed the values as literals
     graft.el.ElCompiler.withVariables(variables) {
-    val incoming = flow.connections.groupBy(_.destinationId)
     // a processor output consumed by 2+ connections would otherwise be
     // recomputed once per downstream plan (separate DataFrame actions share
     // no scans — the FlowFrame.routed N-scan trap); persist those nodes so
     // the sweep materializes each shared stage once. At cluster scale this
     // is the standard persist-the-fan-out-point pattern.
     val fanOut: Set[String] =
-      if (!materializeFanOut) Set.empty
-      else flow.connections.groupBy(_.sourceId)
-        .filter(_._2.size > 1).keySet
+      flow.connections.groupBy(_.sourceId).filter(_._2.size > 1).keySet
+    val caches = new Processors.CacheTracker
+    val (outputs, dropped) = wire(flow) { (p, input) =>
+      val out =
+        try Processors.apply(spark, p, input, flow.services, caches)
+        catch {
+          case _: Processors.NoInputException =>
+            // never scheduled this sweep (no live upstream — e.g. its only
+            // connection failed group-scoped resolution)
+            Processors.emptyFlowFrame(spark)
+        }
+      if (!fanOut(p.id)) out
+      else caches.track(
+        out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
+    FlowResult(flow, outputs, dropped, caches.all)
+    }
+  }
+
+  /**
+   * The one flow walk, shared by the batch sweep ([[run]]) and the
+   * streaming query ([[FlowStreaming.assemble]]): each processor's input
+   * is the union of its live incoming connections, each connection applying
+   * the reference Connection's rules whatever the scheduling — relationship
+   * selection, FlowFile expiration, "drop empty" and clone-on-fan-out
+   * lineage. `dispatch` turns (processor, input) into its routed output;
+   * returns every processor's output and the back edges dropped to break
+   * cycles.
+   */
+  private[flow] def wire(flow: FlowDef)(
+      dispatch: (ProcessorDef, Option[DataFrame]) => DataFrame)
+      : (Map[String, DataFrame], Seq[ConnectionDef]) = {
+    val incoming = flow.connections.groupBy(_.destinationId)
     // Kahn's algorithm with cycle breaking: schedule any processor whose
     // live incoming edges all come from computed processors; when none is
     // ready (a cycle), drop the FIRST-DECLARED blocked processor's edges
@@ -88,66 +118,49 @@ object FlowRunner {
             .foreach(dropped += _)
       }
     }
+    val live = flow.connections.filterNot(dropped.contains)
     val outputs = collection.mutable.Map[String, DataFrame]()
-    val procCaches = new Processors.CacheTracker
     order.foreach { id =>
-      val p = flow.processor(id)
       val ins = incoming.getOrElse(id, Nil).filterNot(dropped.contains)
-        .flatMap { c =>
-          outputs.get(c.sourceId).map { up =>
-            val selected =
-              if (c.relationships.isEmpty) up
-              else up.filter(col(FlowFrame.Relationship)
-                .isin(c.relationships: _*))
-            // queue TTL at the receiving end (Connection.cpp:153-158)
-            val alive0 = c.expirationMs match {
-              case Some(ms) => selected.filter(
-                unix_millis(current_timestamp()) -
-                  unix_millis(col(FlowFrame.EntryDate)) <= ms)
-              case None => selected
-            }
-            // "drop empty": zero-size FlowFiles never enqueue
-            // (Connection.cpp:98,124)
-            val alive =
-              if (!c.dropEmpty) alive0
-              else alive0.filter(coalesce(
-                length(col(FlowFrame.Content).cast("binary")), lit(0)) > 0)
-            val base = alive.withColumn(FlowFrame.Relationship,
-              lit(null: String))
-            // CLONE lineage (Provenance.h CLONE): a relationship feeding
-            // 2+ connections duplicates the FlowFile per queue
-            // (ProcessSession clone on multi-connection routing). Distinct
-            // relationships on separate edges are routing, not cloning.
-            // Each clone gets a deterministic child uuid and its parent
-            // recorded; the event attrs are stamped BEFORE the uuid swap
-            // so parents reference the original.
-            def overlap(o: ConnectionDef): Boolean =
-              o.relationships.isEmpty || c.relationships.isEmpty ||
-                o.relationships.exists(c.relationships.contains)
-            val isClone = flow.connections.filterNot(dropped.contains)
-              .exists(o => o.sourceId == c.sourceId && o.id != c.id &&
-                overlap(o))
-            if (!isClone) base
-            else Lineage.stampClone(base, c.id)
+        .map { c =>
+          val up = outputs(c.sourceId)
+          val selected =
+            if (c.relationships.isEmpty) up
+            else up.filter(col(FlowFrame.Relationship)
+              .isin(c.relationships: _*))
+          // queue TTL at the receiving end (Connection.cpp:153-158)
+          val alive0 = c.expirationMs match {
+            case Some(ms) => selected.filter(
+              unix_millis(current_timestamp()) -
+                unix_millis(col(FlowFrame.EntryDate)) <= ms)
+            case None => selected
           }
+          // "drop empty": zero-size FlowFiles never enqueue
+          // (Connection.cpp:98,124)
+          val alive =
+            if (!c.dropEmpty) alive0
+            else alive0.filter(coalesce(
+              length(col(FlowFrame.Content).cast("binary")), lit(0)) > 0)
+          val base = alive.withColumn(FlowFrame.Relationship,
+            lit(null: String))
+          // CLONE lineage (Provenance.h CLONE): a relationship feeding
+          // 2+ connections duplicates the FlowFile per queue
+          // (ProcessSession clone on multi-connection routing). Distinct
+          // relationships on separate edges are routing, not cloning.
+          // Each clone gets a deterministic child uuid and its parent
+          // recorded; the event attrs are stamped BEFORE the uuid swap
+          // so parents reference the original.
+          def overlap(o: ConnectionDef): Boolean =
+            o.relationships.isEmpty || c.relationships.isEmpty ||
+              o.relationships.exists(c.relationships.contains)
+          val isClone = live.exists(o =>
+            o.sourceId == c.sourceId && o.id != c.id && overlap(o))
+          if (!isClone) base
+          else Lineage.stampClone(base, c.id)
         }
-      val input = ins.reduceOption(_ unionByName _)
-      val out =
-        try Processors.apply(spark, p, input, flow.services, procCaches)
-        catch {
-          case _: Processors.NoInputException =>
-            // never scheduled this sweep (no live upstream — e.g. its only
-            // connection failed group-scoped resolution)
-            Processors.emptyFlowFrame(spark)
-        }
-      outputs(id) =
-        if (fanOut(id))
-          out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else out
+      outputs(id) = dispatch(flow.processor(id), ins.reduceOption(_ unionByName _))
     }
-    val cached = order.filter(fanOut).map(outputs(_)).toSeq ++ procCaches.all
-    FlowResult(flow, outputs.toMap, dropped.toSeq, cached)
-    }
+    (outputs.toMap, dropped.toSeq)
   }
 }
 
@@ -201,9 +214,6 @@ object Processors {
       lit(relationship).as(FlowFrame.Relationship))
   }
 
-  /** Collects DataFrames a processor persists internally (e.g. the
-    * MergeContent defragment input staged once for its three subtrees) so
-    * the flow runner can release them with the fan-out caches. */
   /** An INPUT_REQUIRED processor invoked with no upstream. Direct callers
     * see it as a config error; a flow sweep treats it as "never scheduled"
     * (the reference's isWorkAvailable gate — such a processor simply does
@@ -212,6 +222,10 @@ object Processors {
   final class NoInputException(msg: String)
       extends IllegalArgumentException(msg)
 
+  /** Collects the DataFrames a flow sweep persists — the fan-out points
+    * and those a processor persists internally (e.g. the MergeContent
+    * defragment input staged once for its three subtrees) — so
+    * [[FlowRunner.FlowResult.release]] can release them together. */
   final class CacheTracker {
     private val buf = collection.mutable.ArrayBuffer[DataFrame]()
     def track(df: DataFrame): DataFrame = { buf += df; df }

@@ -14,78 +14,62 @@ import graft.streaming.FlowRuntime
  * lazy transforms the batch sweep uses (they are relationship-routed
  * column ops, agnostic to batch vs stream), and the terminal edge lands
  * in a relationship-partitioned sink — one query, one checkpoint, the
- * micro-batch as the session commit. The scheduling strategy/period of
- * the SOURCE processor picks the trigger (FlowRuntime.trigger).
+ * micro-batch as the session commit. Runs drain what is available with
+ * `processAllAvailable` on the default trigger; a CRON_DRIVEN source runs
+ * through [[runCron]], one drain per cron instant.
  *
- * Scope: linear/branching DAGs with ONE source and ONE terminal
- * processor. Stateful fan-in (DefragmentText, MergeContent Bin-Pack)
- * dispatches to streaming/StatefulOps flatMapGroupsWithState stages,
- * keyed by the source's own sequence numbers for arrival order.
+ * The connections are wired by the batch sweep's own walk
+ * ([[FlowRunner.wire]]), so a streaming flow honours relationship
+ * selection, `flowfile expiration`, `drop empty` and clone lineage exactly
+ * as a batch sweep does; only the per-processor dispatch is streaming's.
+ *
+ * Scope: acyclic DAGs with ONE source and ONE terminal processor (a cycle
+ * the walk would break is rejected). Stateful fan-in (DefragmentText,
+ * MergeContent Bin-Pack) dispatches to streaming/StatefulOps
+ * flatMapGroupsWithState stages, keyed by the source's own sequence
+ * numbers for arrival order.
  */
 object FlowStreaming {
 
   /** Assemble the flow as a streaming DataFrame ending at the single
     * terminal processor's routed output. */
   def assemble(spark: SparkSession, flow: FlowDef): DataFrame = {
-    val incoming = flow.connections.groupBy(_.destinationId)
-    val outgoing = flow.connections.groupBy(_.sourceId)
-    val sources = flow.processors.filter(p => !incoming.contains(p.id))
-    require(sources.size == 1,
-      s"streaming flow needs exactly one source, got ${sources.map(_.name)}")
-    val terminals = flow.processors.filter(p => !outgoing.contains(p.id))
-    require(terminals.size == 1,
-      s"streaming flow needs exactly one terminal, got ${terminals.map(_.name)}")
-
-    val outputs = collection.mutable.Map[String, DataFrame]()
+    val source = soleSource(flow)
+    val terminal = soleTerminal(flow)
     // EXPLICIT queue limits on the source's outgoing connection(s) become
     // per-trigger admission control (SURVEY §2.10: "max work queue size" →
     // a maxOffsetsPerTrigger-style rate limit; the strictest edge wins).
     // swapThreshold has no Spark analogue — spill subsumes it.
-    val srcConns = flow.connections.filter(_.sourceId == sources.head.id)
+    val srcConns = flow.connections.filter(_.sourceId == source.id)
     val limits = QueueLimits(
       maxCount = srcConns.flatMap(_.maxQueueSize).minOption,
       maxBytes = srcConns.flatMap(_.maxQueueDataSize).minOption)
-    outputs(sources.head.id) = streamSource(spark, sources.head, limits)
-    // processors are declared source-to-sink in every shipped example;
-    // walk until the terminal resolves (cycles rejected by the no-input rule)
-    var remaining = flow.processors.filterNot(p => outputs.contains(p.id))
-    while (remaining.nonEmpty) {
-      val ready = remaining.filter(p =>
-        incoming(p.id).forall(c => outputs.contains(c.sourceId)))
-      require(ready.nonEmpty, s"unresolvable flow (cycle?): " +
-        remaining.map(_.name).mkString(","))
-      ready.foreach { p =>
-        val ins = incoming(p.id).flatMap { c =>
-          outputs.get(c.sourceId).map { up =>
-            val sel = if (c.relationships.isEmpty) up
-              else up.filter(col(FlowFrame.Relationship)
-                .isin(c.relationships: _*))
-            val base = sel.withColumn(FlowFrame.Relationship,
-              lit(null: String))
-            // CLONE lineage on multi-connection routing — same rule as the
-            // batch runner (FlowRunner edge wiring): a relationship feeding
-            // 2+ connections duplicates the FlowFile per queue, each clone
-            // stamped with its parent and a deterministic child uuid
-            def overlap(o: ConnectionDef): Boolean =
-              o.relationships.isEmpty || c.relationships.isEmpty ||
-                o.relationships.exists(c.relationships.contains)
-            val isClone = flow.connections.exists(o =>
-              o.sourceId == c.sourceId && o.id != c.id && overlap(o))
-            if (!isClone) base else Lineage.stampClone(base, c.id)
-          }
-        }
-        val input = ins.reduceOption(_ unionByName _)
-        outputs(p.id) = statefulProcessor(spark, p, input)
-          .getOrElse(Processors.apply(spark, p, input, flow.services))
-      }
-      remaining = remaining.filterNot(p => outputs.contains(p.id))
+    val (outputs, dropped) = FlowRunner.wire(flow) { (p, input) =>
+      if (p.id == source.id) streamSource(spark, p, limits)
+      else statefulProcessor(spark, p, input)
+        .getOrElse(Processors.apply(spark, p, input, flow.services))
     }
-    outputs(terminals.head.id)
+    require(dropped.isEmpty, "streaming flow has a cycle through " +
+      dropped.map(_.id).mkString(","))
+    outputs(terminal.id)
   }
 
+  /** The one processor with no incoming (source) or no outgoing
+    * (terminal) connection. */
+  private def soleSource(flow: FlowDef): ProcessorDef =
+    sole(flow, "source")(_.destinationId)
+  private def soleTerminal(flow: FlowDef): ProcessorDef =
+    sole(flow, "terminal")(_.sourceId)
+  private def sole(flow: FlowDef, role: String)(
+      end: ConnectionDef => String): ProcessorDef =
+    flow.processors.filterNot(p => flow.connections.exists(end(_) == p.id)) match {
+      case Seq(p) => p
+      case other => throw new IllegalArgumentException(
+        s"streaming flow needs exactly one $role, got ${other.map(_.name)}")
+    }
+
   /** Run the assembled flow into `outRoot` (relationship-partitioned
-    * parquet) with the source's scheduling strategy as the trigger;
-    * drains available data and returns the running query. */
+    * parquet); drains available data and returns the running query. */
   def run(spark: SparkSession, flow: FlowDef, outRoot: String,
           checkpoint: String): StreamingQuery = {
     val routed = assemble(spark, flow)
@@ -108,12 +92,7 @@ object FlowStreaming {
    */
   def runCron(spark: SparkSession, flow: FlowDef, outRoot: String,
               checkpoint: String, maxDrains: Int): Seq[java.time.LocalDateTime] = {
-    val incoming = flow.connections.groupBy(_.destinationId)
-    val source = flow.processors.filter(p => !incoming.contains(p.id)) match {
-      case Seq(s) => s
-      case other => throw new IllegalArgumentException(
-        s"streaming flow needs exactly one source, got ${other.map(_.name)}")
-    }
+    val source = soleSource(flow)
     require(source.schedulingStrategy == "CRON_DRIVEN",
       s"runCron needs a CRON_DRIVEN source, got ${source.schedulingStrategy}")
     val cron = graft.streaming.Cron(source.schedulingPeriod)
@@ -142,13 +121,7 @@ object FlowStreaming {
   def runWithTerminalSink(spark: SparkSession, flow: FlowDef,
                           checkpoint: String,
                           outRootFallback: String): StreamingQuery = {
-    val incoming = flow.connections.groupBy(_.destinationId)
-    val outgoing = flow.connections.groupBy(_.sourceId)
-    val terminal = flow.processors.filter(p => !outgoing.contains(p.id)) match {
-      case Seq(t) => t
-      case other => throw new IllegalArgumentException(
-        s"need exactly one terminal, got ${other.map(_.name)}")
-    }
+    val terminal = soleTerminal(flow)
     val props = terminal.properties
     terminal.kind match {
       case "PutFile" =>
@@ -156,12 +129,12 @@ object FlowStreaming {
         // results already (Processors dispatch); its DIRECTORY becomes
         // the partitioned sink root for the flow's upstream edge instead,
         // which is the scan-once bulk-write shape at scale
-        val upstream = assembleUpTo(spark, flow, incoming, terminal)
+        val upstream = assembleUpTo(spark, flow, terminal)
         FlowRuntime.runAvailable(
           FlowRuntime.relationshipSink(upstream, props("Directory")),
           checkpoint)
       case "PublishKafka" =>
-        val upstream = assembleUpTo(spark, flow, incoming, terminal)
+        val upstream = assembleUpTo(spark, flow, terminal)
         val opts = graft.sources.Kafka.publishOptions(
           graft.sources.Kafka.PublishProps(
             brokers = props("Known Brokers"),
@@ -182,14 +155,14 @@ object FlowStreaming {
   /** Assemble the flow but stop at (exclude) the given terminal — its
     * INPUT edge is the stream handed to a native sink. */
   private def assembleUpTo(spark: SparkSession, flow: FlowDef,
-                           incoming: Map[String, Seq[ConnectionDef]],
                            terminal: ProcessorDef): DataFrame = {
     val trimmed = FlowDef(flow.name,
       flow.processors.filterNot(_.id == terminal.id),
       flow.connections.filterNot(_.destinationId == terminal.id),
       flow.services)
     val upstreamOut = assemble(spark, trimmed)
-    val rels = incoming.getOrElse(terminal.id, Nil).flatMap(_.relationships)
+    val rels = flow.connections.filter(_.destinationId == terminal.id)
+      .flatMap(_.relationships)
     if (rels.isEmpty) upstreamOut
     else upstreamOut.filter(col(FlowFrame.Relationship).isin(rels: _*))
   }
@@ -203,17 +176,17 @@ object FlowStreaming {
     val props = p.properties
     def prop(name: String, default: String): String =
       props.getOrElse(name, default)
+    def in: DataFrame = input.getOrElse(throw new IllegalArgumentException(
+      s"'${p.name}' has no incoming connection"))
+    // arrival order from the source's own sequence (tail line offset /
+    // listener seq) — monotonically_increasing_id is not available on
+    // streaming frames
+    val ordCol = coalesce(FlowFrame.attr("tailfile.lineOffset"),
+      FlowFrame.attr("net.seq"), lit("0")).cast("long")
     p.kind match {
       case "DefragmentText" =>
-        val in = input.getOrElse(throw new IllegalArgumentException(
-          s"'${p.name}' has no incoming connection"))
-        // source key = filename attr (the per-file reassembly unit);
-        // arrival order from the source's own sequence (tail line offset /
-        // listener seq) — monotonically_increasing_id is not available on
-        // streaming frames
-        val ordCol = coalesce(FlowFrame.attr("tailfile.lineOffset"),
-          FlowFrame.attr("net.seq"), lit("0")).cast("long")
-        // the reference TailFile keeps the delimiter in each FlowFile's
+        // source key = filename attr (the per-file reassembly unit). The
+        // reference TailFile keeps the delimiter in each FlowFile's
         // content (TailFile.cpp:134) and DefragmentText concatenates
         // payloads raw — our tail source strips the '\n', so restore it
         // for tail-fed fragments to reassemble the original text
@@ -254,13 +227,9 @@ object FlowStreaming {
         // Apache NiFi's public DetectDuplicate surface over the stateful
         // dedup op: Cache Entry Identifier (EL; default = content md5)
         // keys the state, Age Off Duration expires idle keys
-        val in = input.getOrElse(throw new IllegalArgumentException(
-          s"'${p.name}' has no incoming connection"))
         val keyCol = props.get("Cache Entry Identifier")
           .map(el => graft.el.ElCompiler.template(el))
           .getOrElse(md5(col(FlowFrame.Content).cast("binary")))
-        val ordCol = coalesce(FlowFrame.attr("tailfile.lineOffset"),
-          FlowFrame.attr("net.seq"), lit("0")).cast("long")
         val keyed = in.select(keyCol.cast("string").as("key"),
           ordCol.as("ord"),
           col(FlowFrame.Content).cast("string").as("content"),
@@ -280,13 +249,10 @@ object FlowStreaming {
 
       case "MergeContent"
         if prop("Merge Strategy", "Defragment") == "Bin-Packing Algorithm" =>
-        val in = input.getOrElse(throw new IllegalArgumentException(
-          s"'${p.name}' has no incoming connection"))
         val entries = in.select(
           coalesce(props.get("Correlation Attribute Name")
             .map(FlowFrame.attr).getOrElse(lit("")), lit("")).as("correlation"),
-          coalesce(FlowFrame.attr("tailfile.lineOffset"),
-            FlowFrame.attr("net.seq"), lit("0")).cast("long").as("ord"),
+          ordCol.as("ord"),
           col(FlowFrame.Content).cast("string").as("content"),
           col(FlowFrame.Uuid).cast("string").as("uuid"))
           .as[graft.streaming.StatefulOps.Entry]

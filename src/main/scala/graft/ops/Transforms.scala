@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.logging.log4j.LogManager
 import graft.core.FlowFrame
 import graft.el.ElCompiler
 
@@ -13,6 +14,8 @@ import graft.el.ElCompiler
  * keeps them metadata-only at 100 TB (FlowFrame scale note).
  */
 object Transforms {
+
+  private val log = LogManager.getLogger("graft.ops.Transforms")
 
   /**
    * UpdateAttribute (UpdateAttribute.cpp:37): dynamic properties
@@ -69,9 +72,8 @@ object Transforms {
       try { java.util.regex.Pattern.compile(pattern); true }
       catch {
         case e: java.util.regex.PatternSyntaxException =>
-          System.err.println("[graft] error encountered when trying to " +
-            s"construct regular expression from property (key: $name): " +
-            e.getMessage)
+          log.warn("error encountered when trying to construct regular " +
+            s"expression from property (key: $name): ${e.getMessage}")
           false
       }
     }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.logging.log4j.LogManager
 import graft.pipeline.Staging.StagingOps
 
 /**
@@ -20,6 +21,8 @@ import graft.pipeline.Staging.StagingOps
  * route: sign-bit bucketing bounds each probe to one bucket's partition.
  */
 object Similarity {
+
+  private val log = LogManager.getLogger("graft.pipeline.Similarity")
 
   /** Fixed-point quantization: float[] → long[] at 1e6 scale. */
   def quantize(embCol: Column): Column =
@@ -698,7 +701,7 @@ object Similarity {
           .collect()
         val envelope = semDedupExactEnvelope(saltBlockSize)
         oversizedRows.filter(_.getLong(2) > envelope).foreach { r =>
-          System.err.println(s"[graft] semDedup exact mode: cluster " +
+          log.warn(s"semDedup exact mode: cluster " +
             s"${r.get(0)} has ${r.getLong(2)} members, past the work " +
             s"envelope 64*saltBlockSize=$envelope — the 64-block cap is " +
             s"saturated and per-task pair count grows ~(csz/64)²; set " +

@@ -13,10 +13,10 @@ import java.time.temporal.ChronoUnit
  * `x#n`. Weekday numbers use the C encoding Sunday=0..Saturday=6 with 7
  * also accepted for Sunday.
  *
- * The flow runtime maps a CRON_DRIVEN source to AvailableNow drains
- * (streaming/FlowRuntime.trigger); [[Cron.calculateNextTrigger]] gives a
- * scheduler the exact local instants to start those drains at — pure
- * driver-side arithmetic, nothing per-row.
+ * A CRON_DRIVEN flow runs through FlowStreaming.runCron, one drain per
+ * cron instant; [[Cron.calculateNextTrigger]] gives it the exact local
+ * instants to start those drains at — pure driver-side arithmetic, nothing
+ * per-row.
  *
  * Deliberately preserved parser quirks (they are the engine's contract,
  * exercised by its own battery, CronTests.cpp): `*`/inc parses the start

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /**
  * Flow-graph runtime glue — SURVEY §2.10/§3.1.
@@ -16,29 +16,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
  * N separate filtered queries.
  */
 object FlowRuntime {
-
-  /** Scheduling strategy → Trigger (TimerDrivenSchedulingAgent.cpp:28,
-    * EventDrivenSchedulingAgent.cpp:39, CronDrivenSchedulingAgent.cpp —
-    * cron fires an external AvailableNow run at the instants
-    * [[cronDelayMs]] computes from the scheduling period's Quartz
-    * expression). */
-  def trigger(strategy: String, periodMs: Long = 1000): Trigger =
-    strategy match {
-      case "TIMER_DRIVEN" => Trigger.ProcessingTime(periodMs)
-      case "EVENT_DRIVEN" => Trigger.ProcessingTime(0)
-      case "CRON_DRIVEN"  => Trigger.AvailableNow()
-      case other => throw new IllegalArgumentException(s"unknown strategy $other")
-    }
-
-  /** Milliseconds from `now` until a CRON_DRIVEN source's next scheduled
-    * drain: the scheduling period carries the Quartz expression
-    * (CronDrivenSchedulingAgent.cpp uses utils::Cron the same way) —
-    * None when the schedule never fires again. */
-  def cronDelayMs(cronExpr: String,
-                  now: java.time.LocalDateTime =
-                    java.time.LocalDateTime.now()): Option[Long] =
-    Cron(cronExpr).calculateNextTrigger(now)
-      .map(next => java.time.Duration.between(now, next).toMillis)
 
   /** ProcessorMetrics' transfer ledger (ProcessSession.cpp:858-866:
     * FlowFile count + content bytes per relationship recorded at each

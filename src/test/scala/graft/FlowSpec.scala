@@ -1556,6 +1556,95 @@ class FlowSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/relationship=unmatched").count() === 1)
   }
 
+  test("batch and stream apply the same connection rules: a drop-empty " +
+       "edge drops the blank line in both modes") {
+    val dir = tmpDir("flow-parity")
+    Files.write(Paths.get(dir, "app.log"), "alpha\n\nbeta\n".getBytes)
+    val yml =
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: tail
+         |  id: t
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    File to Tail: $dir/app.log
+         |- name: stamp
+         |  id: u
+         |  class: org.apache.nifi.processors.standard.UpdateAttribute
+         |  Properties:
+         |    seen: 'yes'
+         |Connections:
+         |- id: c1
+         |  source id: t
+         |  source relationship names: [success]
+         |  destination id: u
+         |  drop empty: true
+         |""".stripMargin
+    def counts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.groupBy("relationship").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batch = counts(FlowRunner.run(spark, FlowConfig.parse(yml))
+      .output("stamp"))
+    val out = tmpDir("flow-parity-sink")
+    FlowStreaming.run(spark, FlowConfig.parse(yml), out,
+      tmpDir("flow-parity-ckpt")).stop()
+    val stream = counts(spark.read.parquet(out))
+    assert(batch === Map("success" -> 2L))
+    assert(stream === batch)
+  }
+
+  test("streaming assembly rejects two sources, two terminals and a " +
+       "retry cycle") {
+    val dir = tmpDir("flow-reject")
+    Files.write(Paths.get(dir, "app.log"), "alpha\n".getBytes)
+    def tail(id: String): String =
+      s"""- name: tail_$id
+         |  id: $id
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    File to Tail: $dir/app.log
+         |""".stripMargin
+    def proc(name: String, kind: String): String =
+      s"""- name: $name
+         |  id: $name
+         |  class: org.apache.nifi.processors.standard.$kind
+         |""".stripMargin
+    def conn(id: String, from: String, rel: String, to: String): String =
+      s"- {id: $id, source id: $from, source relationship names: [$rel], " +
+        s"destination id: $to}\n"
+    def flow(procs: Seq[String], conns: Seq[String]): FlowDef =
+      FlowConfig.parse("MiNiFi Config Version: 3\nProcessors:\n" +
+        procs.mkString + "Connections:\n" + conns.mkString)
+    val twoSources = flow(
+      Seq(tail("t1"), tail("t2"), proc("log", "LogAttribute")),
+      Seq(conn("c1", "t1", "success", "log"),
+        conn("c2", "t2", "success", "log")))
+    val twoTerminals = flow(
+      Seq(tail("t"), proc("log1", "LogAttribute"),
+        proc("log2", "LogAttribute")),
+      Seq(conn("c1", "t", "success", "log1"),
+        conn("c2", "t", "success", "log2")))
+    val retryCycle = flow(
+      Seq(tail("t"), proc("stamp", "UpdateAttribute"),
+        proc("retry", "RetryFlowFile"), proc("log", "LogAttribute")),
+      Seq(conn("c1", "t", "success", "stamp"),
+        conn("c2", "stamp", "success", "retry"),
+        conn("c3", "retry", "retry", "stamp"),
+        conn("c4", "retry", "retries_exceeded", "log")))
+    val sources = intercept[IllegalArgumentException](
+      FlowStreaming.assemble(spark, twoSources))
+    assert(sources.getMessage.contains("exactly one source"))
+    val terminals = intercept[IllegalArgumentException](
+      FlowStreaming.assemble(spark, twoTerminals))
+    assert(terminals.getMessage.contains("exactly one terminal"))
+    val cycle = intercept[IllegalArgumentException](
+      FlowStreaming.assemble(spark, retryCycle))
+    assert(cycle.getMessage.contains("cycle"))
+    // the same cycle runs as a batch sweep, with its back edge dropped
+    assert(FlowRunner.run(spark, retryCycle).droppedEdges.map(_.id) ===
+      Seq("c3"))
+  }
+
   test("streaming ListenSyslog flow parses RFC5424/RFC3164 into attributes " +
        "and routes invalid") {
     val out = tmpDir("syslog-sink")

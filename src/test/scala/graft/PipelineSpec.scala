@@ -543,15 +543,9 @@ class PipelineSpec extends SparkSpec {
     val unblocked = run(Int.MaxValue)
     // capture the envelope warning: the boundary cluster (70 > 64) must
     // name its size and the saltBlockSize that restores bounded tasks
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
-    val salted = try {
-      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
-      run(1)
-    } finally System.setErr(realErr)
+    val (salted, warning) = warnings("graft.pipeline.Similarity")(run(1))
     assert(salted === unblocked)
     assert(unblocked(0L) && (1L until 70L).forall(i => !unblocked(i)))
-    val warning = errBuf.toString("UTF-8")
     assert(warning.contains("past the work envelope 64*saltBlockSize=64"))
     assert(warning.contains("70 members"))
     assert(warning.contains(">= 2")) // ceil(70/64) — the suggested size

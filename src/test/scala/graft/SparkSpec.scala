@@ -30,6 +30,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("entryDate", current_timestamp())
       .withColumn("relationship", lit(null: String))
   }
+
+  /** Run `body` with log4j logger `name` at WARN and its WARN messages
+    * captured; returns the body's value and the messages, one per line. */
+  def warnings[T](name: String)(body: => T): (T, String) = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val buf = new StringBuffer
+    val capture = new AbstractAppender(s"capture-$name", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN)
+          buf.append(e.getMessage.getFormattedMessage).append('\n')
+    }
+    capture.start()
+    val logger = LoggerContext.getContext(false).getLogger(name)
+    val prev = logger.getLevel
+    logger.addAppender(capture)
+    Configurator.setLevel(name, Level.WARN)
+    try (body, buf.toString)
+    finally {
+      logger.removeAppender(capture)
+      Configurator.setLevel(name, prev)
+      capture.stop()
+    }
+  }
 }
 
 object SparkSpec {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Bm25, Similarity, Staging}
+import graft.pipeline.{Bm25, Classifier, Perplexity, Similarity, Staging}
 
 /**
  * The pluggable staging barrier (Staging.stage): all three modes —
@@ -80,6 +80,25 @@ class StagingSpec extends SparkSpec {
     withMode("banana") {
       val ex = intercept[IllegalArgumentException] { bm25Rows() }
       assert(ex.getMessage.contains("banana"))
+    }
+  }
+
+  test("each fused scorer runs once per row: the optimized plan holds " +
+       "one kernel call, not one per projected field") {
+    def calls(kernel: String, df: org.apache.spark.sql.DataFrame): Int =
+      kernel.r.findAllIn(df.queryExecution.optimizedPlan.toString).size
+    // a range-built corpus: over a local relation the optimizer would fold
+    // the whole plan into a LocalRelation and hide the kernel calls
+    val texts = docs.collect().map(_.getString(1)).toSeq
+    val labeled = spark.range(texts.size).select(col("id").as("doc_id"),
+      element_at(typedLit(texts), col("id").cast("int") + 1).as("text"),
+      (col("id") < 2L).as("ref"))
+    withMode("none") {
+      assert(calls("graft_kn_score", Perplexity.perplexityBucketsKN(
+        labeled, col("doc_id"), col("text"), col("ref"), buckets = 64)) === 1)
+      assert(calls("graft_token_score", Classifier.logisticScores(
+        labeled, col("doc_id"), col("text"), col("ref"), buckets = 64,
+        steps = 1)) === 1)
     }
   }
 }
